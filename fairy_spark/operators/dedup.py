@@ -161,7 +161,7 @@ def _shingled_sig_arrow(
     yield [] shingles and all-null signatures exactly like array_min
     over nothing — and gated by an equality test against the HOF
     form."""
-    assert num_hashes <= 17, "60-bit windows beyond hex offset 16 leave the digest"
+    assert num_hashes <= 18, "60-bit windows beyond hex offset 17 leave the digest"
     import pandas as pd
 
     def gen(batches):
@@ -784,7 +784,7 @@ def simhash64_pairs(
     # broadcasts while it genuinely fits and demotes to the shuffle
     # equi-join at scale (measured 6.8 s → 3.7 s at sf0.1).
 
-    sig = park_persisted("simhash", sig, checkpoint=True)
+    sig = park_persisted(sig, checkpoint=True)
     bands = F.array(
         *[
             F.struct(
@@ -1015,7 +1015,6 @@ def winnow_best_match(
     # the corpus-shaped fingerprint table out of broadcast plans, which
     # is also the only plan that survives at 100 TB).
     fps = park_persisted(
-        "winnow",
         (_winnow_fps_arrow if engine == "arrow" else _winnow_fps_hof)(
             docs, id_col, text_col, k, w
         ),
@@ -1023,7 +1022,6 @@ def winnow_best_match(
     )
     df_counts = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     keep = park_persisted(
-        "winnow",
         fps.join(
             df_counts.filter((F.col("df") >= min_df) & (F.col("df") <= max_df)), "fp"
         ).select("id", "n_fp", "fp"),
@@ -1092,7 +1090,7 @@ def hamming_pairs(
     # as simhash64_pairs: single evaluation, materialized-size
     # statistics keep the banded-join strategy data-driven).
 
-    sig = park_persisted("hamming_pairs", sig, checkpoint=True)
+    sig = park_persisted(sig, checkpoint=True)
     bands = F.array(
         *[
             F.struct(
@@ -1472,7 +1470,6 @@ def dedup_lines_near(
     broadcast plans — the only plan that survives at 100 TB."""
 
     lines = park_persisted(
-        "linesnear",
         docs.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), "\n")).alias("_line_no", "_line"),
@@ -1480,7 +1477,6 @@ def dedup_lines_near(
         checkpoint=True,
     )
     distinct = park_persisted(
-        "linesnear",
         lines.filter(F.length("_line") >= min_line_chars)
         .groupBy("_dig")
         .agg(
@@ -1493,7 +1489,6 @@ def dedup_lines_near(
         checkpoint=True,
     )
     sig = park_persisted(
-        "linesnear",
         distinct.select(
             "_dig",
             "_first",
@@ -1649,7 +1644,6 @@ def dedup_lines_near_append(
         # (the streaming leg's parquet-backed durable index) is
         # already materialized.
         base_index = park_persisted(
-            "linesnear",
             line_near_index(
                 base_docs, id_col, text_col, shingle_n, num_hashes, min_line_chars
             ),
@@ -1669,7 +1663,6 @@ def dedup_lines_near_append(
     # |delta|-bound frame each, in exchange for halving the per-batch
     # recompute.
     delta_lines = park_persisted(
-        "linesnear",
         delta_docs.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), "\n")).alias("_line_no", "_line"),
@@ -1688,7 +1681,6 @@ def dedup_lines_near_append(
     # base repeat already drops below, cheaper than any signature
     delta_new = delta_firsts.join(base_digs, "_dig", "left_anti")
     delta_sigs = park_persisted(
-        "linesnear",
         delta_new.select(
             "_dig", "_first", shingle_set(F.col("_rep"), shingle_n).alias("_sh")
         )

@@ -292,9 +292,7 @@ def _cleaned_corpus(
     # branches of the near-dup stage (signature build, survivor-length
     # join, final anti-join), each of which re-ran the Gopher tokenize
     # scan + sha2 agg without this boundary (guide §1.2 step 1).
-    q2 = park_persisted(
-        "pipeline", q1.join(canonical, id_col, "left_semi"), checkpoint=True
-    )
+    q2 = park_persisted(q1.join(canonical, id_col, "left_semi"), checkpoint=True)
     return near_dup_removed(
         q2,
         id_col,
@@ -320,7 +318,6 @@ def _pack_and_split(
     # decontamination suffix (guide §2.3 — decide on a lightweight
     # proxy, never re-derive the heavy lineage per pass).
     t = park_persisted(
-        "pipeline",
         q4.select(id_col, F.size(tokenize(F.col(text_col))).alias("n_tokens")),
         checkpoint=True,
     )
@@ -388,7 +385,7 @@ def pretrain_corpus(
         # manager — decontaminate consumes q3 twice (gram explode +
         # anti-join) and the packing passes re-derive everything
         # below otherwise.
-        q3 = park_persisted("pipeline", q3, checkpoint=True)
+        q3 = park_persisted(q3, checkpoint=True)
     q4 = (
         q3
         if probe_docs is None

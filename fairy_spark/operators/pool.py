@@ -1,182 +1,123 @@
-"""Bounded named pools for materialized intermediate frames.
+"""The package's one pool of materialized intermediate frames.
 
-The optimization rounds' recompute-amplification fix (guide §1.2 step 1,
-§2.4, §5): several operators build an expensive frame that feeds
-MULTIPLE join branches of one query — the cleaned corpus in the
-pretraining pipeline, the co-purchase pair set in the triangle queries,
-the winnow fingerprint explode. Catalyst evaluates each branch
-independently (exchange reuse only fires when two byte-identical
-exchanges survive planning), so without a materialization boundary the
-subtree re-executes once per branch — measured 10,780 parquet scans in
-ONE declarative-pipeline plan and 66 lineitem scans per triangle query
-before r14.
+Operators park a frame that feeds several plan branches (the cleaned
+corpus in the pretraining pipeline, the co-purchase edges of the
+triangle queries, the winnow fingerprints): Catalyst plans each branch
+independently, so without a materialization boundary the subtree runs
+once per branch.
 
-Two materialization modes (see park_persisted's docstring for the
-measured trade-off): ``persist`` + eager count for small-plan frames —
-the InMemoryRelation keeps accurate size statistics so broadcast joins
-survive planning — and ``localCheckpoint(eager=True)`` for
-lineage-heavy frames, where a persisted entry's multi-thousand-node
-plan would tax EVERY later action in the session with CacheManager
-plan comparisons (guide §5: "localCheckpoint() is a cheaper way to cut
-lineage").
+``park_persisted`` has two modes. Persist mode (the default) caches
+the frame, because the cached relation keeps accurate size statistics
+and so broadcast joins over it survive planning. Checkpoint mode
+(``checkpoint=True``) takes a ``localCheckpoint``, because it cuts the
+plan to a leaf that the CacheManager never has to compare against
+later actions, which is what a lineage-heavy frame needs.
 
-The bounded FIFO pool keeps the most recent frames referenced so a
-still-lazy caller's frame is not reclaimed, and evicts beyond the cap
-(persisted frames are unpersisted — correctness-safe, Spark recomputes
-from lineage; checkpointed frames drop the reference and the
-ContextCleaner reclaims their blocks after GC). Trade-off at 100 TB:
-localCheckpoint forfeits lineage-based recovery of the materialized
-stage (an executor loss invalidates the frame) — the production shape
-for a multi-TB boundary is the durable parquet stage
-(`pipeline_pretrain_corpus_staged`), which the declarative form's
-in-memory boundary deliberately mirrors.
+Persisted frames are recorded in the pool under every ``pool_scope``
+that parked them. Once the pool holds more than ``_GLOBAL_CAP`` cache
+entries, the oldest entries whose scopes have all been closed are
+unpersisted; Spark recomputes an unpersisted frame from its lineage,
+so eviction costs time, never values. Checkpointed frames are not
+recorded: their blocks live as long as some frame still references
+them, and the ContextCleaner reclaims them after that.
 
-This is NOT cross-run result caching: every query invocation
-materializes its OWN freshly-built frame (nothing is keyed on the
-input path or reused between invocations), and the eager
-materialization runs inside the bench's timed window.
+Nothing is keyed on query inputs: every invocation materializes its own
+frame, and the eager materialization runs inside the caller's timing.
 """
 
 from __future__ import annotations
 
 import threading
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
-# effective pool name -> list of (frame, was_persisted); insertion
-# order of the dict itself is the cross-pool eviction order.
-_POOLS: dict[str, list[tuple[DataFrame, bool]]] = {}
-_DEFAULT_CAP = 4
-# Total parked frames across ALL pools (leak bound now that pools can
-# be invocation-scoped): beyond it, the oldest frames of the
-# least-recently-created OTHER pools are evicted first.
+# Cache-entry id -> (newest frame parked on that entry, the scopes that
+# parked it). Dict order is eviction order, oldest first.
+_PARKED: dict[int, tuple[DataFrame, frozenset[object]]] = {}
+# Scopes some thread is still inside; their entries are never evicted.
+_OPEN: set[object] = set()
 _GLOBAL_CAP = 32
-
-# Per-invocation pool scoping (VERDICT r14 #7): shared pool names were
-# a latent perf hazard — every graph query parks into pool "wedges"
-# (cap 4, FIFO), so two queries interleaved in one session could evict
-# each other's persisted frames mid-use (Spark recomputes correctly;
-# the park's benefit silently vanishes). A scope suffixes the pool
-# name per query invocation, so concurrent/interleaved invocations
-# never share a FIFO. Thread-local: concurrent driver threads (guide
-# §2.6) each get their own scope.
+# The innermost open scope of each driver thread.
 _SCOPE = threading.local()
 
 
 @contextmanager
-def pool_scope(tag: str = ""):
-    """Enter a fresh park scope: park_persisted calls inside suffix
-    their pool names with a per-invocation token. Re-entrant (the
-    previous scope is restored on exit); exiting does NOT evict the
-    scope's frames — the returned DataFrames are lazy and consumed
-    after the builder returns — the global frame cap bounds them."""
-    token = f"{tag}#{uuid.uuid4().hex[:8]}"
+def pool_scope():
+    """Open a park scope for the current thread (one per query
+    invocation). Frames persisted inside it are not evicted while the
+    scope is open; after it closes they stay cached until the global
+    cap pushes them out, because the caller's returned DataFrame is
+    still lazy. Scopes nest."""
+    token = object()
     prev = getattr(_SCOPE, "value", None)
     _SCOPE.value = token
+    with _LOCK:
+        _OPEN.add(token)
     try:
-        yield token
+        yield
     finally:
+        with _LOCK:
+            _OPEN.discard(token)
         _SCOPE.value = prev
 
 
-def park_persisted(
-    pool: str,
-    df: DataFrame,
-    cap: int = _DEFAULT_CAP,
-    checkpoint: bool = False,
-    reliable: bool = False,
-) -> DataFrame:
-    """Materialize ``df`` eagerly and park the result in the named
-    bounded pool; returns the materialized frame.
+def _entry_id(df: DataFrame) -> int | None:
+    """Identity of the CacheManager entry a persisted ``df`` reads, or
+    None when no entry holds its plan."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    entry = cm.lookupCachedData(df._jdf)
+    if entry.isEmpty():
+        return None
+    return entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
 
-    Two modes, chosen by the frame's LINEAGE SIZE (measured trade-off,
-    r14):
 
-    - ``checkpoint=False`` (default) — ``persist`` + eager count. The
-      InMemoryRelation carries accurate post-materialization size
-      statistics, so Catalyst still plans broadcast joins over the
-      frame (winnow's pair self-join measured 1.3 s persisted vs 28 s
-      checkpointed, purely from BHJ → SMJ demotion against a
-      statistics-less leaf). Right for frames whose logical plan is
-      small. Evicted frames are unpersisted.
-    - ``checkpoint=True`` — ``localCheckpoint``: the plan is CUT to a
-      LogicalRDD leaf and the CacheManager is never touched. Right for
-      lineage-heavy frames (the pipeline's cleaned corpus nests the
-      whole connected-components loop): persisting those registers a
-      multi-thousand-node plan that every later action in the SESSION
-      pays canonicalization/comparison against (measured 51 s → 144 s
-      on an unrelated query that merely ran after one). Evicted frames
-      just drop the reference; the ContextCleaner reclaims blocks.
-    - ``reliable=True`` (VERDICT r14 #9) — ``df.checkpoint()`` against
-      the context's checkpoint dir (set from
-      $FAIRY_SPARK_CHECKPOINT_DIR, or a fresh temp dir, when unset).
-      Same lineage cut as localCheckpoint but the blocks are written to
-      the (shared at scale) checkpoint filesystem, so an executor loss
-      does NOT invalidate the frame — the mode a real cluster run needs
-      for multi-TB boundaries; localCheckpoint blocks are
-      executor-local and unreplicated. Costs a durable write; keep the
-      default local mode for this harness's single-box bench.
+def park_persisted(df: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """Materialize ``df`` eagerly and return the materialized frame.
+
+    - ``checkpoint=False``: ``persist`` plus an eager count, recorded in
+      the pool under the open scope, because the cached relation keeps
+      the size statistics that let small frames broadcast (winnow's
+      pair self-join: 1.3 s persisted, 28 s checkpointed).
+    - ``checkpoint=True``: ``localCheckpoint(eager=True)``, not recorded,
+      because cutting the plan to a leaf spares every later action the
+      CacheManager comparison against a lineage-heavy plan (an
+      unrelated query went from 51 s to 144 s after one such persist).
+
+    A persisted frame whose plan matches one parked earlier shares that
+    cache entry; the entry then belongs to both scopes and moves to the
+    newest end of the eviction order, so closing the older scope can no
+    longer uncache it.
     """
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            import os
-            import tempfile
-
-            sc.setCheckpointDir(
-                os.environ.get("FAIRY_SPARK_CHECKPOINT_DIR")
-                or tempfile.mkdtemp(prefix="fairy_spark_ckpt_")
-            )
-        df = df.checkpoint(eager=True)
-        checkpoint = True  # pool bookkeeping: nothing to unpersist on evict
-    if checkpoint and not reliable:
-        df = df.localCheckpoint(eager=True)
-    elif not checkpoint:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
+    if checkpoint:
+        return df.localCheckpoint(eager=True)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
     scope = getattr(_SCOPE, "value", None)
-    effective = f"{pool}@{scope}" if scope else pool
     with _LOCK:
-        frames = _POOLS.setdefault(effective, [])
-        frames.append((df, not checkpoint))
-        while len(frames) > cap:
-            _drop(frames.pop(0))
-        # Global bound across pools: scoped pools are per-invocation,
-        # so without this a long session would accumulate one pool per
-        # query call. Evict oldest-pool-first, never the current one —
-        # an in-flight invocation keeps all its own frames live (the
-        # VERDICT r14 #7 hazard was exactly cross-invocation eviction).
-        while sum(len(v) for v in _POOLS.values()) > _GLOBAL_CAP:
-            victim = next((k for k in _POOLS if k != effective), None)
+        key = _entry_id(df)
+        if key is None:
+            # another thread evicted the shared entry after the count:
+            # the frame recomputes from lineage, so leave it unrecorded
+            return df
+        _, scopes = _PARKED.pop(key, (None, frozenset()))
+        _PARKED[key] = (df, scopes | {scope})
+        while len(_PARKED) > _GLOBAL_CAP:
+            victim = next(
+                (k for k, (_, s) in _PARKED.items() if k != key and not s & _OPEN),
+                None,
+            )
             if victim is None:
                 break
-            _drop(_POOLS[victim].pop(0))
-            if not _POOLS[victim]:
-                del _POOLS[victim]
+            _PARKED.pop(victim)[0].unpersist(blocking=False)
     return df
 
 
-def _drop(entry: tuple[DataFrame, bool]) -> None:
-    old, was_persisted = entry
-    if was_persisted:
-        old.unpersist(blocking=False)
-
-
-def clear_pool(pool: str | None = None) -> None:
-    """Unpersist/drop every parked frame in ``pool`` — including its
-    invocation-scoped variants ``pool@scope`` — or in all pools when
-    None; test/bench hygiene, checkpoint block reclaim follows via the
-    ContextCleaner."""
+def clear_pool() -> None:
+    """Unpersist every frame in the pool, whatever its scope; for test
+    and bench hygiene between runs."""
     with _LOCK:
-        names = (
-            [n for n in _POOLS if n == pool or n.startswith(f"{pool}@")]
-            if pool is not None
-            else list(_POOLS)
-        )
-        for name in names:
-            for entry in _POOLS.pop(name, []):
-                _drop(entry)
+        while _PARKED:
+            _PARKED.popitem()[1][0].unpersist(blocking=False)

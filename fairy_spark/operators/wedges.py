@@ -24,15 +24,8 @@ DEFAULT_HUB_CAP = 4096
 
 
 def persist_edges(df: DataFrame) -> DataFrame:
-    """Persist an edge frame that feeds several join inputs, parked in
-    the shared bounded pool (operators/pool.py). r14: the old
-    evict-ALL-on-persist list meant a query persisting two frames in
-    sequence (pairs, then the oriented edges derived from them)
-    silently unpersisted the first mid-construction — every branch
-    still referencing it recomputed from scratch, the exact hazard
-    ADVICE r12 flagged for the centroid pool. The bounded pool keeps
-    the most recent frames (cap 4) and evicts only beyond the cap,
-    which is correctness-safe (Spark recomputes unpersisted frames).
+    """Materialize an edge frame that feeds several join inputs, once
+    (operators/pool.py).
 
     Checkpoint-mode (lineage cut, NO size statistics) is deliberate
     for edge frames: they are corpus-shaped, and persist-mode's
@@ -42,7 +35,7 @@ def persist_edges(df: DataFrame) -> DataFrame:
     the edge list is TBs. The statistics-less leaf keeps the shuffle
     join plans the hub-capped split is designed around."""
 
-    return park_persisted("wedges", df, checkpoint=True)
+    return park_persisted(df, checkpoint=True)
 
 
 def _park_degrees(df: DataFrame) -> DataFrame:
@@ -54,7 +47,7 @@ def _park_degrees(df: DataFrame) -> DataFrame:
     at 100 TB the statistics exceed the broadcast threshold and the
     planner degrades gracefully to the shuffle join on its own."""
 
-    return park_persisted("wedges", df)
+    return park_persisted(df)
 
 
 def orient_edges(pairs: DataFrame, deg: DataFrame | None = None) -> DataFrame:

@@ -150,11 +150,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             from fairy_spark.shipping import ensure_package_shipped
 
             ensure_package_shipped(spark)
-            # Per-invocation park scope (VERDICT r14 #7): frames this
-            # builder parks land in pools suffixed with a fresh token,
-            # so interleaved query invocations can't FIFO-evict each
-            # other's materialized frames mid-use.
-            with pool_scope(name):
+            # Per-invocation park scope: frames this builder persists
+            # are not evicted while it runs (operators/pool.py).
+            with pool_scope():
                 return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

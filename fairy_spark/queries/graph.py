@@ -19,17 +19,14 @@ from fairy_spark.sources.tables import load_table
 
 _ITERS = 3
 
-# The graph queries' persisted edge frames: each derives an edge set
+# The graph queries' parked edge frames: each derives an edge set
 # that feeds 3-7 downstream pipeline consumers (join inputs, degree
-# aggs, anti joins) — without a persist Spark re-derives the whole
+# aggs, anti joins) — without a park Spark re-derives the whole
 # scan→pair-distinct pipeline once per consumer (graph_triangles:
-# measured 27.7 s → 11.4 s at sf0.1). Cap 1: the previous frame is
-# unpersisted FIRST — the dsir/dedup cache-drop discipline (llm.py
-# _DSIR_PERSISTED): persist-then-unpersist in the other order drops
-# the shared CacheManager entry.
-# The pool lives in operators/wedges.py (extracted in r9 so the
-# triangle algorithms run on arbitrary edge lists); this module keeps
-# the private alias for its other edge-frame consumers.
+# measured 27.7 s → 11.4 s at sf0.1). persist_edges lives in
+# operators/wedges.py so the triangle algorithms run on arbitrary edge
+# lists; this module keeps the private alias for its other edge-frame
+# consumers.
 from fairy_spark.operators.pool import park_persisted
 from fairy_spark.operators.wedges import persist_edges as _persist_edges
 
@@ -700,7 +697,6 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10.6 → 13.0 s; at 100 TB the same statistics push it past the
     # broadcast threshold and the plan degrades gracefully to SMJ).
     deg = park_persisted(
-        "wedges",
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
@@ -818,7 +814,6 @@ def graph_clustering_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (statistics preserved) for the same reason as
     # graph_clustering_coeff's deg park.
     deg = park_persisted(
-        "wedges",
         pairs.select(F.col("u").alias("node"))
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
@@ -846,7 +841,6 @@ def graph_clustering_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statistics should keep driving the anti/semi joins' broadcast
     # decision.
     hubs = park_persisted(
-        "wedges",
         deg.join(outd.withColumnRenamed("src", "node"), "node", "left")
         .join(ind.withColumnRenamed("dst", "node"), "node", "left")
         .filter(

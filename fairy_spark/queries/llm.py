@@ -327,7 +327,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     base = park_persisted(
-        "winnow", _winnow_docs_arrow(d, "doc_id", "text", 4, 4), checkpoint=True
+        _winnow_docs_arrow(d, "doc_id", "text", 4, 4), checkpoint=True
     ).withColumnRenamed("id", "doc_id")
     e = base.select("doc_id", F.explode("fps").alias("fp"))
     counts = e.groupBy("fp").agg(F.count(F.lit(1)).alias("nd"))
@@ -2633,7 +2633,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans of documents in the before-plan). Checkpoint-mode park:
     # chunk-frame is corpus-shaped — stays out of broadcast plans.
 
-    e = park_persisted("cdc_chunks", e, checkpoint=True)
+    e = park_persisted(e, checkpoint=True)
     counts = e.groupBy("dig").agg(F.countDistinct("doc_id").alias("ndocs"))
     dup = F.when(F.col("ndocs") > 1, True)
     return (
@@ -3385,9 +3385,7 @@ def _pipeline_pretrain(
     # agg + semi-join without this boundary — measured 94 s → the
     # staged shape's ~20 s at sf0.1 came almost entirely from this
     # class of re-evaluation.
-    q2 = park_persisted(
-        "pipeline", q1.join(canonical, "doc_id", "left_semi"), checkpoint=True
-    )
+    q2 = park_persisted(q1.join(canonical, "doc_id", "left_semi"), checkpoint=True)
     q3 = near_dup_removed(
         q2, threshold=0.4, num_hashes=num_hashes, band_rows=band_rows
     )
@@ -3401,7 +3399,7 @@ def _pipeline_pretrain(
         # instead of parquet — stage 4 consumes q3 twice (gram explode
         # + anti-join) and stage 5's eager prefix-sum passes re-derive
         # everything below them per action without it.
-        q3 = park_persisted("pipeline", q3, checkpoint=True)
+        q3 = park_persisted(q3, checkpoint=True)
 
     # stage 4: the doc_id%97==0 stand-in is the probe set; the corpus
     # drops the probe rows themselves, then everything sharing a gram
@@ -3414,7 +3412,7 @@ def _pipeline_pretrain(
     # windowed plan) — park the two-column frame so those passes never
     # re-run stage 4's gram explode + semi-join (guide §2.3: decide on
     # lightweight proxies, §8's "move heavy bytes once" in miniature).
-    q4 = park_persisted("pipeline", q4, checkpoint=True)
+    q4 = park_persisted(q4, checkpoint=True)
 
     # stage 5: 512-token greedy packing (sharded two-pass prefix sum)
     packed = pack_into_bins(q4, "doc_id", "n_tokens", bin_tokens=512)
@@ -3533,11 +3531,6 @@ def pipeline_pretrain_corpus_staged_scale(spark: SparkSession, sf_dir: str) -> D
     )
 
 
-# Previous call's persisted vocab-stats frame (unpersisted on the next
-# call — same leak discipline as operators/dedup.py's signature index).
-_DSIR_PERSISTED: list = []
-
-
 @register(
     "text_dsir_weights",
     oracle=f"""
@@ -3578,35 +3571,23 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer and per-doc sums are order-independent and
     engine-portable. Plan: ONE corpus scan builds the vocab table
     (cr = raw count, ct = conditional target count in the same hash
-    agg); it is persisted (vocab-sized, unpersisted on the next call
-    per the dedup.py convention) so the totals row and the per-token
-    ratios both derive from it without re-scanning; then one broadcast
-    join back onto the exploded token stream — the corpus is read
-    exactly twice (stats pass + scoring pass), never five times (the
-    naive raw/tgt/tot formulation Catalyst can't CSE)."""
-    from pyspark import StorageLevel
-
+    agg); it is parked persisted (vocab-sized) so the totals row and
+    the per-token ratios both derive from it without re-scanning; then
+    one broadcast join back onto the exploded token stream — the corpus
+    is read exactly twice (stats pass + scoring pass), never five times
+    (the naive raw/tgt/tot formulation Catalyst can't CSE)."""
     d = load_table(spark, sf_dir, "documents")
     toks = (
         d.select("doc_id", "lang", F.explode(tokenize(F.col("text"))).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    # Unpersist the PREVIOUS call's frame before persisting the new one:
-    # the two plans are identical, so persist-then-unpersist in the other
-    # order silently drops the shared CacheManager entry and every
-    # downstream branch recompiles back to a corpus scan (observed).
-    while _DSIR_PERSISTED:
-        _DSIR_PERSISTED.pop().unpersist(blocking=False)
-    vocab = (
-        toks.groupBy("tok")
-        .agg(
+    # eager: tot and lr below must not re-derive the corpus agg
+    vocab = park_persisted(
+        toks.groupBy("tok").agg(
             F.count(F.lit(1)).alias("cr"),
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("ct"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    vocab.count()  # eager: tot and lr below must not re-derive the corpus agg
-    _DSIR_PERSISTED.append(vocab)
 
     tot = vocab.agg(
         F.sum("cr").alias("nr"),
@@ -4088,7 +4069,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaf keeps the banded-join strategy statistics-driven
     # (simhash64_pairs has the full argument). Measured 6.9 → 4.2 s.
 
-    sig = park_persisted("simhash", sig, checkpoint=True)
+    sig = park_persisted(sig, checkpoint=True)
     bands = F.array(
         *[
             F.struct(
@@ -4600,7 +4581,7 @@ def dedup_simhash_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature evaluation, statistics-driven banded join (see
     # simhash64_pairs for the measured argument).
 
-    sig = park_persisted("simhash", sig, checkpoint=True)
+    sig = park_persisted(sig, checkpoint=True)
     bands = F.array(
         *[
             F.struct(
@@ -5546,7 +5527,6 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plans — the pattern's 100 TB shape — while the scan-count drops
     # to the one eager pass each.
     t = park_persisted(
-        "ppjoin",
         docs.select(
             "doc_id", F.array_distinct(tokenize(F.col("text"))).alias("toks")
         ),
@@ -5570,7 +5550,6 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", n.alias("n"), F.slice("ord", F.lit(1), p).alias("prefix")
     )
     ptok = park_persisted(
-        "ppjoin",
         pre.select("doc_id", "n", F.explode("prefix").alias("token")),
         checkpoint=True,
     )
@@ -5884,7 +5863,6 @@ def dedup_eval_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersect/union rows) on a single core.
     par = spark.sparkContext.defaultParallelism
     s = park_persisted(
-        "evalmh",
         docs.select("doc_id", shingle_set(F.col("text")).alias("sh")).repartition(par),
     )
     sig = s.withColumn("sig", minhash_signature(F.col("sh"), 8))
@@ -5892,7 +5870,6 @@ def dedup_eval_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     uni = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
     exact = park_persisted(
-        "evalmh",
         a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
         .filter((F.lit(5) * inter >= F.lit(2) * uni) & (uni > 0))
         .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb")),
@@ -5902,7 +5879,6 @@ def dedup_eval_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ba, bb = bands.alias("ba"), bands.alias("bb")
     cand = park_persisted(
-        "evalmh",
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))

@@ -29,9 +29,11 @@ def _rows(df):
 
 def test_sig_builders_equal_on_testdata(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = _rows(_shingled_sig_arrow(docs, "doc_id", "text", 3, 8, []))
-    h = _rows(_shingled_sig_hof(docs, "doc_id", "text", 3, 8, []))
-    assert a == h and len(a) > 0
+    # 18 is the widest signature: its last window starts at hex offset 17
+    for num_hashes in (8, 18):
+        a = _rows(_shingled_sig_arrow(docs, "doc_id", "text", 3, num_hashes, []))
+        h = _rows(_shingled_sig_hof(docs, "doc_id", "text", 3, num_hashes, []))
+        assert a == h and len(a) > 0
 
 
 def test_sig_builders_equal_with_blocks_and_edges(spark):
